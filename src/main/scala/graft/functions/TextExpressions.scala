@@ -73,8 +73,10 @@ object PolyHash {
   * family. This expression is one loop with a LinkedHashSet, emitting
   * shingles via `UTF8String.concatWs` with zero intermediate arrays —
   * the same treatment [[PolyHash]] got for the hash itself.
-  * Value-identical by construction; property-pinned against the
-  * composable form in LlmSpec (random unicode/whitespace documents).
+  * Value-identical by construction, a null token array included (an
+  * empty array, like the composable form's `otherwise` arm — so the
+  * result is never null); property-pinned against the composable form
+  * in ShingleArraySpec (random unicode/whitespace documents).
   */
 case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"shingle width n=$n must be >= 1")
@@ -88,13 +90,22 @@ case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingle_array"
 
-  override def nullSafeEval(input: Any): Any =
-    ShingleArray.shingle(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
+  override def nullable: Boolean = false
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ShingleArray.shingle($c, $n)")
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    ShingleArray.shingle(
+      child.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+         |${c.code}
+         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+         |  graft.functions.ShingleArray.shingle(${c.isNull} ? null : ${c.value}, $n);
+       """.stripMargin, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -103,11 +114,12 @@ case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
 object ShingleArray {
   private val Space = UTF8String.fromString(" ")
 
-  /** Shared by interpreted eval and generated code. */
+  /** Shared by interpreted eval and generated code; a null `toks` has
+    * no tokens. */
   def shingle(
       toks: org.apache.spark.sql.catalyst.util.ArrayData,
       n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val len = toks.numElements()
+    val len = if (toks == null) 0 else toks.numElements()
     if (len < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     val all = new Array[UTF8String](len)

@@ -81,21 +81,9 @@ object Urls {
     * aggregate (each map task keeps ONE candidate row per URL), so a
     * hotlinked/mirrored canonical URL with millions of crawls — the
     * same Zipf head [[hostCap]] guards against one level up — never
-    * lands all its rows on a single rank-window task. `nativeDedup =
-    * false` keeps the per-URL rank-window arm (the A/B shape; the
-    * single-task cliff under URL skew). */
-  def dedupByUrl(
-      df: DataFrame,
-      idCol: String,
-      urlCol: String,
-      nativeDedup: Boolean = true): DataFrame = {
-    val c = canonicalize(df, urlCol)
-    if (nativeDedup) firstPerUrl(c, idCol)
-    else {
-      val w = Window.partitionBy(col("canonical_url")).orderBy(col(idCol).asc)
-      c.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
-  }
+    * lands all its rows on a single rank-window task. */
+  def dedupByUrl(df: DataFrame, idCol: String, urlCol: String): DataFrame =
+    firstPerUrl(canonicalize(df, urlCol), idCol)
 
   /** The min_by survivor pick over an already-canonicalized relation —
     * shared by [[dedupByUrl]] and [[dedupByUrlIncremental]]. */

@@ -28,7 +28,7 @@ object ModelQueries extends QueryModule {
       |)""".stripMargin
 
   /** The TTI formula SQL, parameterized on row/col prefixes; mirrors the
-    * Spark expression tree in PressingIntensity.pairs term-for-term. */
+    * TTI arithmetic of PressingIntensity.pairs (PiPairsAgg) term-for-term. */
   private def ttiSql: String =
     """sqrt(((cx+cvx)-cx)*((cx+cvx)-cx) + ((cy+cvy)-cy)*((cy+cvy)-cy) + ((cz+cvz)-cz)*((cz+cvz)-cz))
       |  * acos( (((cx+cvx)-cx)*((rx+rvx)-cx) + ((cy+cvy)-cy)*((ry+rvy)-cy) + ((cz+cvz)-cz)*((rz+rvz)-cz))

@@ -22,6 +22,8 @@ import org.apache.spark.sql.functions._
   * DECIMAL(38,0)) — the honest cost of producing the values. Prints
   * one JSON line with `"metric":"honest_total"`; numbers live in
   * SCALING.md next to the official ones, never replacing them.
+  * `SPARK_GRAFT_BENCH_ONLY=q1,q2` restricts the run to the named
+  * queries; each failed query's exception goes to stderr.
   */
 object HonestBench {
   def main(args: Array[String]): Unit = {
@@ -37,11 +39,17 @@ object HonestBench {
     val headline = SparkEntry.allQueries.filter(_.headline)
       .filter(q => only.forall(_.contains(q.name)))
     // a query that fails must NOT fold its time-to-failure into the
-    // honest total (it would read as a speedup) — track it separately
+    // honest total (it would read as a speedup) — track it separately,
+    // and print its exception to stderr so the failure is diagnosable
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def fail(name: String, e: Throwable): Unit = {
+      System.err.println(s"[honest-bench] $name failed:")
+      e.printStackTrace()
+      failed += name
+    }
     headline.foreach { q =>
       try consumeAll(q.run(spark, sfDir))
-      catch { case scala.util.control.NonFatal(_) => failed += q.name }
+      catch { case scala.util.control.NonFatal(e) => fail(q.name, e) }
       spark.catalog.clearCache()
     }
     val results = headline.filterNot(q => failed.contains(q.name)).flatMap { q =>
@@ -49,7 +57,7 @@ object HonestBench {
         val t0 = System.nanoTime()
         val ok =
           try { consumeAll(q.run(spark, sfDir)); true }
-          catch { case scala.util.control.NonFatal(_) => failed += q.name; false }
+          catch { case scala.util.control.NonFatal(e) => fail(q.name, e); false }
         spark.catalog.clearCache()
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }

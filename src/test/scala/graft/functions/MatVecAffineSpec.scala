@@ -1,12 +1,12 @@
 package graft.functions
 
 import graft.SparkTestSession
-import graft.graphs.GnnInference
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bit-parity of the codegen'd [[MatVecAffine]] against the
-  * interpreted HOF fold it replaced ([[GnnInference.affineFold]]),
+  * interpreted HOF fold it replaced ([[MatVecAffineSpec.affineFold]]),
   * including the fold's null quirks, plus the whole-stage-codegen
   * pin. The q_gnn_forward / q_gnn_head oracles additionally pin the
   * production path cross-engine on real data. */
@@ -31,7 +31,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = vecs.select(
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof"))
+        MatVecAffineSpec.affineFold(col("z"), w, b, act).as("hof"))
         .collect()
       rows.foreach { r =>
         val nat = r.getSeq[Double](0)
@@ -52,7 +52,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = big.select(
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof")).collect()
+        MatVecAffineSpec.affineFold(col("z"), w, b, act).as("hof")).collect()
       rows.foreach { r =>
         r.getSeq[Double](0).zip(r.getSeq[Double](1)).foreach { case (n, h) =>
           assert(java.lang.Double.doubleToRawLongBits(n) ===
@@ -72,7 +72,7 @@ class MatVecAffineSpec extends AnyFunSuite {
     for (act <- acts) {
       val rows = odd.select(col("id"),
         MatVecAffine.affineNative(col("z"), w, b, act).as("nat"),
-        GnnInference.affineFold(col("z"), w, b, act).as("hof")).collect()
+        MatVecAffineSpec.affineFold(col("z"), w, b, act).as("hof")).collect()
       rows.foreach { r =>
         if (r.isNullAt(1) || r.isNullAt(2)) {
           assert(r.isNullAt(1) === r.isNullAt(2), s"act=$act id=${r.getLong(0)}")
@@ -102,5 +102,29 @@ class MatVecAffineSpec extends AnyFunSuite {
     assert(wsc.exists(_.toString.contains("matvec_affine")),
       q.queryExecution.executedPlan.toString)
     assert(q.count() === 100)
+  }
+}
+
+object MatVecAffineSpec {
+
+  /** The higher-order-function form of `GnnInference`'s affine layer
+    * (CodegenFallback), kept as the reference the native expression is
+    * checked against, like Similarity.dotFold. */
+  def affineFold(z: Column, w: Seq[Seq[Double]], b: Seq[Double], act: String): Column = {
+    val wl = typedLit(w)
+    val bl = typedLit(b)
+    val raw = transform(sequence(lit(0), lit(b.size - 1)), k =>
+      element_at(bl, k + 1) +
+        aggregate(
+          zip_with(z, transform(wl, row => element_at(row, k + 1)), (zi, wi) => zi * wi),
+          lit(0.0), (acc, x) => acc + x))
+    act match {
+      case "relu" => transform(raw, v => greatest(v, lit(0.0)))
+      case "sigmoid" => transform(raw, v => lit(1.0) / (lit(1.0) + exp(-v)))
+      case "softplus" =>
+        // ln(1+eˣ) with the standard overflow guard max(x,0)+ln(1+e^−|x|)
+        transform(raw, v => greatest(v, lit(0.0)) + log(lit(1.0) + exp(-abs(v))))
+      case _ => raw
+    }
   }
 }

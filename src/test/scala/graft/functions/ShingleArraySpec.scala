@@ -40,12 +40,22 @@ class ShingleArraySpec extends AnyFunSuite {
     }
   }
 
-  test("null tokens array yields null (explode drops it, like the when/otherwise form)") {
+  test("null tokens array yields an empty array, as the composable form") {
     import spark.implicits._
-    val df = Seq((1, null.asInstanceOf[String])).toDF("id", "text")
-      .select(col("id"), Shingles.tokens(col("text")).as("toks"))
-    val n = df.select(explode(TextExpressions.shingleArrayNative(col("toks"), 3))).count()
-    val ref = df.select(explode(array_distinct(Shingles.shingles(col("toks"), 3)))).count()
-    assert(n === ref)
+    // a local relation runs the interpreted eval; a range with a
+    // runtime-null text runs the generated code
+    val local = Seq((1, null.asInstanceOf[String])).toDF("id", "text")
+    val ranged = spark.range(1).select(col("id"), when(col("id") < 0, "x y z").as("text"))
+    for (input <- Seq(local, ranged); n <- 1 to 3) {
+      val df = input.select(col("id"), Shingles.tokens(col("text")).as("toks"))
+      val both = df.select(
+        array_distinct(Shingles.shingles(col("toks"), n)).as("ref"),
+        TextExpressions.shingleArrayNative(col("toks"), n).as("native"))
+      assert(!both.schema("native").nullable)
+      val r = both.head()
+      assert(!r.isNullAt(0) && !r.isNullAt(1), s"n=$n")
+      assert(r.getSeq[String](1).isEmpty, s"n=$n")
+      assert(r.getSeq[String](0) === r.getSeq[String](1), s"n=$n")
+    }
   }
 }

@@ -31,16 +31,6 @@ class GraphConverterSpec extends AnyFunSuite {
     ("a1", "away", -1.0, 0.0), ("a2", "away", -2.0, 1.0),
     ("ball", "ball", 1.1, 2.1)))
 
-  test("graphFrames: the native tensor aggregates equal the generic assembly end-to-end") {
-    // protects the BucketedSoak A/B arm: if either path drifts, the
-    // soak's native-vs-generic comparison stops measuring what it says
-    val settings = GraphSettings(pad = false)
-    def rows(nativeAgg: Boolean) = GraphConverter
-      .graphFrames(smallFrame, settings, nativeAgg = nativeAgg)
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(nativeAgg = true) === rows(nativeAgg = false))
-  }
-
   test("node order: possession players, defenders, ball (by id)") {
     val idx = GraphConverter.withNodeIndex(smallFrame)
       .orderBy("node_idx").select(ObjectId).collect().map(_.getString(0))

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Staged-vs-fused equality for the r18 PiPairsAgg fuse: the fused
-  * [[PressingIntensity.pairs]] must reproduce [[PressingIntensity.pairsStaged]]
-  * bit-for-bit on the real pipeline for every declared parameter
-  * combination, and on corner frames with null/NaN coordinates, null
-  * carrier flags, and null object ids. */
+  * [[PressingIntensity.pairs]] must reproduce the relational reference
+  * [[PiPairsStaged.pairs]] bit-for-bit on the real pipeline for every
+  * declared parameter combination, and on corner frames with null/NaN
+  * coordinates, null carrier flags, null object ids and null frame
+  * keys. */
 class PiPairsFusedSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import Cols._
@@ -79,7 +80,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     declaredCombos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(dat, settings, params),
-        PressingIntensity.pairsStaged(dat, settings, params))
+        PiPairsStaged.pairs(dat, settings, params))
     }
   }
 
@@ -87,7 +88,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     val scoped = PressingIntensity.filterTimeRange(dat, 100000000L, 500000000L, 1)
     assertEqual(
       PressingIntensity.pairs(scoped, TrackingSettings(), PressingIntensity.Params()),
-      PressingIntensity.pairsStaged(scoped, TrackingSettings(), PressingIntensity.Params()))
+      PiPairsStaged.pairs(scoped, TrackingSettings(), PressingIntensity.Params()))
   }
 
   test("remaining enum arms: full/max, full/include, teams/exclude") {
@@ -101,7 +102,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     combos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(dat, settings, params),
-        PressingIntensity.pairsStaged(dat, settings, params))
+        PiPairsStaged.pairs(dat, settings, params))
     }
   }
 
@@ -130,10 +131,18 @@ class PiPairsFusedSpec extends AnyFunSuite {
       ("f3", null.asInstanceOf[String], "away", Some(6.0), Some(0.0), Some(0.0),
         Some(0.0), Some(0.0), Some(0.0), Some(0.0), Some(false)),
       ("f3", "ball", "ball", Some(0.1), Some(0.0), Some(0.0),
-        Some(0.0), Some(0.0), Some(0.0), Some(0.0), Some(false)))
+        Some(0.0), Some(0.0), Some(0.0), Some(0.0), Some(false)),
+      // frame 4: a null frame id — no frame, so no pairs (the reference's
+      // inner join on the frame keys matches no null)
+      ("f4", "a1", "home", Some(0.0), Some(0.0), Some(0.0),
+        Some(1.0), Some(0.0), Some(0.0), Some(1.0), Some(true)),
+      ("f4", "d1", "away", Some(3.0), Some(0.0), Some(0.0),
+        Some(0.0), Some(0.0), Some(0.0), Some(0.0), Some(false)),
+      ("f4", "ball", "ball", Some(0.1), Some(0.0), Some(0.0),
+        Some(1.0), Some(0.0), Some(0.0), Some(1.0), Some(false)))
       .toDF("f", ObjectId, TeamId, X, Y, Z, Vx, Vy, Vz, Speed, IsBallCarrier)
       .withColumn(GameId, lit("g")).withColumn(PeriodId, lit(1))
-      .withColumn(FrameId, abs(hash(col("f"))).cast("long"))
+      .withColumn(FrameId, when(col("f") =!= "f4", abs(hash(col("f"))).cast("long")))
       .withColumn(Timestamp, col(FrameId) * 40000L)
       .withColumn(BallOwningTeamId, lit("home"))
       .drop("f")
@@ -146,7 +155,7 @@ class PiPairsFusedSpec extends AnyFunSuite {
     combos.foreach { case (settings, params) =>
       assertEqual(
         PressingIntensity.pairs(rows, settings, params),
-        PressingIntensity.pairsStaged(rows, settings, params))
+        PiPairsStaged.pairs(rows, settings, params))
     }
   }
 }
